@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Driver-run benchmark: every SparkEntry query executed end-to-end at
   * SPARK_GRAFT_SF_DIR (default sf0.1), one JSON line to stdout.
@@ -13,35 +12,8 @@ object Bench {
     // optional prefix filter (dev only — the driver always runs all):
     // tools/run_main.sh graft.Bench q52 q5a
     val wanted = args.toSeq
-    def selected(name: String) = wanted.isEmpty || wanted.exists(name.startsWith)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // the engine's Catalyst extension class, activated the sanctioned
-      // way (at session construction): SQL functions, optimizer rule,
-      // and the as-of join planner strategy
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      // fork-free local-FS permissions (graft.NioLocalFs): Hadoop
-      // shells out chmod per created file without libhadoop native
-      .config("spark.hadoop.fs.file.impl", "graft.NioLocalFileSystem")
-      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
-        "graft.NioLocalFsAbstract")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", graft.Fs.scratch("graft_spark_warehouse"))
-      // r15 (guide §1 measured, DriverProfile): the default 100-entry
-      // whole-stage-codegen class cache is smaller than ONE lifecycle
-      // query's ~150 generated classes, so every statement recompiled
-      // its fragments on every rep (qec rep-2: 141 Janino compilations
-      // with the default, 0 with the cache sized to the workload; the
-      // qd*/qe* family's tail improved 1.3-1.9x). Plan-count-dependent,
-      // not data-size-dependent — a production driver serving many
-      // distinct statements wants the same headroom. Env-overridable.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "8192"))
-      .getOrCreate()
+    val spark = GraftSession.build(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     spark.sparkContext.setLogLevel("WARN")
     // untimed warm-up: JVM/codegen/shuffle-infra first-use costs land
     // here instead of inside whichever query happens to run first
@@ -68,11 +40,7 @@ object Bench {
       spark.read.parquet(wdir).write.format("noop").mode("overwrite").save()
       graft.Fs.deleteRecursively(wdir)
     }
-    // Caches are kept WITHIN a query group (same "qN" decade prefix) —
-    // the ML queries q70-q74 reuse plan-identical cached relations, worth
-    // ~3× on the group — but cleared at group boundaries so the dedup/
-    // similarity caches (q52/q55/q62/q63…) don't accumulate executor
-    // memory across the whole 56-query run.
+    // Caches follow SparkEntry.runGrouped's group policy.
     //
     // Each query runs SPARK_GRAFT_BENCH_REPS times (default 2) and
     // reports the per-query MIN: round-2/3 single-sample numbers made a
@@ -109,13 +77,8 @@ object Bench {
         """"([^"]+)"\s*:\s*([0-9][0-9.]*)""".r.findAllMatchIn(txt)
           .map(m => m.group(1) -> m.group(2).toDouble).toMap
       } catch { case _: Throwable => Map.empty }
-    var prevGroup = ""
     val failed = Seq.newBuilder[String]
-    val results = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter(q => selected(q._1)).map { case (name, fn) =>
-      val group = name.take(2)
-      if (prevGroup.nonEmpty && group != prevGroup) spark.catalog.clearCache()
-      prevGroup = group
+    val results = SparkEntry.runGrouped(spark, wanted) { (name, fn) =>
       var ok = true
       def rep(): Option[Double] =
         if (!ok) None // a failed query doesn't retry — it's in "failed"

@@ -480,6 +480,30 @@ object SparkEntry {
     "q74_sse_parity"        -> (FixturePipelines.sseParity _),
   )
 
+  /** The registered queries whose names start with one of `prefixes`
+    * (all of them when empty), in name order. */
+  def select(prefixes: Seq[String]): Seq[(String, (SparkSession, String) => DataFrame)] =
+    queries.toSeq.sortBy(_._1)
+      .filter { case (name, _) => prefixes.isEmpty || prefixes.exists(name.startsWith) }
+
+  /** Runs `body` over `select(prefixes)` under the one cache policy the
+    * timing run (Bench) and the correctness run (Verify) share: cached
+    * relations are kept WITHIN a query group (same two-character name
+    * prefix) — the ML queries q70-q74 reuse plan-identical cached
+    * relations, worth ~3× on the group — but cleared at group boundaries
+    * so the dedup/similarity caches (q52/q55/q62/q63…) don't accumulate
+    * executor memory across the whole run. */
+  def runGrouped[A](spark: SparkSession, prefixes: Seq[String])(
+      body: (String, (SparkSession, String) => DataFrame) => A): Seq[A] = {
+    var prevGroup = ""
+    select(prefixes).map { case (name, fn) =>
+      val group = name.take(2)
+      if (prevGroup.nonEmpty && group != prevGroup) spark.catalog.clearCache()
+      prevGroup = group
+      body(name, fn)
+    }
+  }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted for seeded-stochastic /
     * engine-specific-hash queries → driver records rows-only checks. */

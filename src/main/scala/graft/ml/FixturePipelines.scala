@@ -91,10 +91,10 @@ object FixturePipelines {
     * metrics as in-band booleans, which the DuckDB oracle states as
     * literals — upgrading q70-q74 from rows-only to hash-checked
     * (round-6 verdict item 4, the q0f literal-`true` pattern). */
-  // Measured at sf0.01 under local[4]/local[8]/local[32]
-  // (tools/MlContractProbe): trainRmse 0.7426-0.7460, test rmse
-  // 0.7549-0.7565, ALS rmse 0.8738 (bit-identical across core counts),
-  // CV avg_rmse 0.8521-0.9742. NOT stable across core counts: the
+  // Measured at sf0.01 under local[4]/local[8]/local[32] by a
+  // since-deleted probe main, MlContractProbe, kept in git history:
+  // trainRmse 0.7426-0.7460, test rmse 0.7549-0.7565, ALS rmse 0.8738
+  // (bit-identical across core counts), CV avg_rmse 0.8521-0.9742. NOT stable across core counts: the
   // KMeans argmin k (observed 6/5/4 — the SSE lag-diffs sit within ~1%
   // of each other while per-k SSE moves ~4% with partitioning), so the
   // `best` flag is deliberately NOT part of the hashed contract; the

@@ -28,7 +28,8 @@ import org.apache.spark.sql.functions._
   * index-construction bug), and the tuning observation (nProbe=2
   * recall) as a documented in-band boolean.
   *
-  * Floor measurement (tools/ServingProbe, sf0.01, local[4]/[8]/[32]):
+  * Floor measurement (sf0.01, local[4]/[8]/[32], measured by a
+  * since-deleted probe main, ServingProbe, kept in git history):
   * per-user nProbe=2 recall spans 0.4-1.0 with min hits 4/10 at every
   * core count. The graded floor is 2/10 — two hits of slack under the
   * observed minimum, because the driver REGENERATES fixtures between

@@ -1614,9 +1614,10 @@ object Relational {
     * back, leaning on exchange reuse to pin one evaluation) survives
     * one layer but breaks when layers nest: the tagged⋈offsets
     * SELF-join makes DeduplicateRelations re-mint one side's exprIds,
-    * canonical equality fails, AQE reuse stops firing, and the probe
-    * (tools/GlobalIndexProbe, the q2i triple-nest shape) measured
-    * 96,160 distinct ranks over 100,000 rows. `zipWithIndex` is
+    * canonical equality fails, AQE reuse stops firing, and a
+    * since-deleted probe main (GlobalIndexProbe, the q2i triple-nest
+    * shape, kept in git history) measured 96,160 distinct ranks over
+    * 100,000 rows. `zipWithIndex` is
     * immune BY CONSTRUCTION: its count job and its compute share the
     * ONE materialized partitioner instance. The Row round-trip is the
     * honest price of exactness; Spark itself ships this primitive

@@ -2,9 +2,9 @@ package graft.tools
 
 import java.lang.management.ManagementFactory
 
-import graft.SparkEntry
+import graft.{GraftSession, SparkEntry}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
 
@@ -99,23 +99,8 @@ object DriverProfile {
 
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
-    val wanted = args.drop(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      // fork-free local-FS permissions (graft.NioLocalFs): Hadoop
-      // shells out chmod per created file without libhadoop native
-      .config("spark.hadoop.fs.file.impl", "graft.NioLocalFileSystem")
-      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
-        "graft.NioLocalFsAbstract")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", graft.Fs.scratch("graft_spark_warehouse"))
-      // same codegen-class-cache sizing as Bench (see the note there)
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "8192"))
-      .getOrCreate()
+    val wanted = args.drop(1).toSeq
+    val spark = GraftSession.build(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     spark.sparkContext.setLogLevel("WARN")
 
     spark.sparkContext.addSparkListener(new SparkListener {
@@ -143,10 +128,9 @@ object DriverProfile {
       .write.format("noop").mode("overwrite").save()
 
     val reps = sys.env.getOrElse("GRAFT_PROFILE_REPS", "1").toInt
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      if (wanted.isEmpty || wanted.exists(name.startsWith))
-        (1 to reps).foreach(r =>
-          profileOne(if (r == 1) name else s"$name#$r", fn(spark, dir)))
+    SparkEntry.select(wanted).foreach { case (name, fn) =>
+      (1 to reps).foreach(r =>
+        profileOne(if (r == 1) name else s"$name#$r", fn(spark, dir)))
     }
     spark.stop()
   }

@@ -1,8 +1,7 @@
 package graft.tools
 
-import graft.SparkEntry
+import graft.{GraftSession, SparkEntry}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 import scala.collection.mutable
 
@@ -16,22 +15,8 @@ import scala.collection.mutable
 object JobProfile {
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
-    val wanted = args.drop(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      // fork-free local-FS permissions (graft.NioLocalFs): Hadoop
-      // shells out chmod per created file without libhadoop native
-      .config("spark.hadoop.fs.file.impl", "graft.NioLocalFileSystem")
-      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
-        "graft.NioLocalFsAbstract")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", graft.Fs.scratch("graft_spark_warehouse"))
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "8192"))
-      .getOrCreate()
+    val wanted = args.drop(1).toSeq
+    val spark = GraftSession.build(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     spark.sparkContext.setLogLevel("WARN")
 
     case class Job(id: Int, desc: String, start: Long,
@@ -77,28 +62,26 @@ object JobProfile {
     // the job times and hides the steady-state shape Bench's min-of-2
     // actually measures.
     val reps = sys.env.getOrElse("SPARK_GRAFT_PROFILE_REPS", "1").toInt.max(1)
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      if (wanted.isEmpty || wanted.exists(name.startsWith)) {
-        (1 until reps).foreach { _ =>
-          try fn(spark, dir).write.format("noop").mode("overwrite").save()
-          catch { case _: Throwable => () }
+    SparkEntry.select(wanted).foreach { case (name, fn) =>
+      (1 until reps).foreach { _ =>
+        try fn(spark, dir).write.format("noop").mode("overwrite").save()
+        catch { case _: Throwable => () }
+      }
+      jobs.synchronized(jobs.clear())
+      val t0 = System.nanoTime()
+      try {
+        fn(spark, dir).write.format("noop").mode("overwrite").save()
+        val wall = (System.nanoTime() - t0) / 1e9
+        val snap = jobs.synchronized(jobs.values.toSeq)
+        val jobSum = snap.map(j => (j.end - j.start).max(0L)).sum / 1e3
+        println(f"%n[profile] $name wall=$wall%.2fs jobs=${snap.size} " +
+          f"jobTimeSum=$jobSum%.2fs gap=${wall - jobSum}%.2fs")
+        snap.sortBy(j => -(j.end - j.start)).take(30).foreach { j =>
+          println(f"  job ${j.id}%4d ${(j.end - j.start) / 1e3}%7.3fs " +
+            f"stages=${j.stages}%2d tasks=${j.tasks}%4d  ${j.desc.take(110)}")
         }
-        jobs.synchronized(jobs.clear())
-        val t0 = System.nanoTime()
-        try {
-          fn(spark, dir).write.format("noop").mode("overwrite").save()
-          val wall = (System.nanoTime() - t0) / 1e9
-          val snap = jobs.synchronized(jobs.values.toSeq)
-          val jobSum = snap.map(j => (j.end - j.start).max(0L)).sum / 1e3
-          println(f"%n[profile] $name wall=$wall%.2fs jobs=${snap.size} " +
-            f"jobTimeSum=$jobSum%.2fs gap=${wall - jobSum}%.2fs")
-          snap.sortBy(j => -(j.end - j.start)).take(30).foreach { j =>
-            println(f"  job ${j.id}%4d ${(j.end - j.start) / 1e3}%7.3fs " +
-              f"stages=${j.stages}%2d tasks=${j.tasks}%4d  ${j.desc.take(110)}")
-          }
-        } catch { case e: Throwable =>
-          println(s"[profile] $name FAILED: ${e.getMessage}")
-        }
+      } catch { case e: Throwable =>
+        println(s"[profile] $name FAILED: ${e.getMessage}")
       }
     }
     spark.stop()

@@ -35,15 +35,7 @@ class EagerPlanAuditSpec extends AnyFunSuite {
 
   private def gated = sys.env.get("GRAFT_SLOW_AUDIT").contains("1")
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-eager-audit")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.warehouse.dir", graft.Fs.scratch("graft_spark_warehouse"))
-    .getOrCreate()
+  private lazy val spark: SparkSession = GraftSession.build(4)
 
   private val sfDir = "/root/testdata/sf0.001"
 

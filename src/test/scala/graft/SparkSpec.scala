@@ -7,19 +7,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * run on the sf0.001 fixtures so the whole suite stays fast). */
 object SparkSpec {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", graft.Fs.scratch("graft_spark_warehouse"))
-      // fork-free local-FS permissions, same registration as the mains —
-      // the whole suite doubles as an integration test of graft.NioLocalFs
-      .config("spark.hadoop.fs.file.impl", "graft.NioLocalFileSystem")
-      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
-        "graft.NioLocalFsAbstract")
-      .getOrCreate()
+    // the shared production settings WITHOUT the extensions: the specs
+    // exercise the runtime GraftExtensions.register* path (ExtensionsSpec,
+    // ChangeFeedSpec), which an extension session would make a no-op.
+    // The whole suite doubles as an integration test of graft.NioLocalFs.
+    val s = GraftSession.builder(4).appName("graft-test").getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }
